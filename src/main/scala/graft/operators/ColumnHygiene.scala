@@ -71,10 +71,10 @@ object ColumnHygiene {
       countDistinct(col(c)).as(s"__dist_$c"),
       min(col(c)).cast("string").as(s"__min_$c"),
       max(col(c)).cast("string").as(s"__max_$c")))
-    val wide = df.agg(aggs.head, aggs.tail: _*)
+    val aggRow = df.agg(aggs.head, aggs.tail: _*)
     val stackArgs = cols.map(c =>
       s"'$c', `__nulls_$c`, `__dist_$c`, `__min_$c`, `__max_$c`").mkString(", ")
-    wide.select(col("__n").as("n_rows"), expr(
+    aggRow.select(col("__n").as("n_rows"), expr(
         s"stack(${cols.size}, $stackArgs) AS (column, n_nulls, n_distinct, min_str, max_str)"))
       .select(col("column"), col("n_rows"), col("n_nulls"),
         col("n_distinct"), col("min_str"), col("max_str"))
@@ -151,10 +151,10 @@ object ColumnHygiene {
     val aggs = count(lit(1)).as("__n") +: checks.map(c =>
       coalesce(sum(when(c.passes, 0L).otherwise(1L)), lit(0L))
         .as(s"__viol_${c.name}"))
-    val wide = df.agg(aggs.head, aggs.tail: _*)
+    val aggRow = df.agg(aggs.head, aggs.tail: _*)
     val stackArgs = checks.map(c =>
       s"'${c.name}', `__viol_${c.name}`, ${c.critical}").mkString(", ")
-    wide.select(col("__n").as("n_rows"), expr(
+    aggRow.select(col("__n").as("n_rows"), expr(
         s"stack(${checks.size}, $stackArgs) AS (check, n_violations, critical)"))
       .select(col("check"), col("n_rows"), col("n_violations"),
         round(when(col("n_rows") > 0,

@@ -18,10 +18,10 @@ object Graph {
     * 32 → 256 partitions = −32% wall on labelPropagation. AQE coalesces
     * partitions DOWN but never splits them up, so the width has to be
     * right before the first exchange, from the operator itself — not a
-    * probe-time env knob. Derived from the SUM OF LEAF SCAN BYTES of the
-    * input's optimized plan (zero-cost, no action: parquet scans report
-    * file bytes) at ~32 MB per partition — on the sf100 label-prop graph
-    * (1.18 B edge rows read from a persisted pair parquet) this lands
+    * probe-time env knob. Derived from the input's leaf scan bytes
+    * ([[Sizing.leafBytes]]) at ~32 MB per partition — on the sf100
+    * label-prop graph (1.18 B edge rows read from a persisted pair
+    * parquet) this lands
     * near the experimentally-best 256. Leaf bytes, NOT full-plan stats:
     * the size-only estimator multiplies through joins (a bench-SF
     * self-join "estimates" terabytes and would pin 2048 tiny
@@ -29,15 +29,13 @@ object Graph {
     * blow-up — degrading to the session default, i.e. exactly the r14
     * shape. Floors at the session default (bench-scale plans stay
     * byte-identical: callers keep the ADAPTIVE no-width repartition
-    * there), caps at 2048, and treats a saturated sum (≥ 2⁴⁷ bytes —
-    * the default-size sentinel of stat-less leaves like checkpoints)
-    * as unknown → session default. */
+    * there), caps at 2048, and keeps the session default when the size
+    * is unknown. */
   private[graft] def edgeWidth(edges: DataFrame): Int = {
     val base = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val bytes = edges.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    if (bytes >= (BigInt(1) << 47)) base
-    else math.max(base, math.min(2048L, (bytes / (32L << 20)).toLong + 1L).toInt)
+    Sizing.leafBytes(edges).fold(base) { bytes =>
+      math.max(base, math.min(2048L, bytes / (32L << 20) + 1L).toInt)
+    }
   }
 
   /** `repartition` that stays ADAPTIVE (no pinned width, AQE-coalescible

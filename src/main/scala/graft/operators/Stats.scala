@@ -96,22 +96,18 @@ object Stats {
   /** Shared two-sample ECDF grid (r16): per distinct value `__v`, side
     * counts (`__ca`/`__cb`), INCLUSIVE cumulative side counts
     * (`__cuma`/`__cumb`) and side totals (`__na`/`__nb`) — the cumulative
-    * + whole-frame windows every two-sample test below shares, in the
-    * scale-adaptive [[Prefix.cumBefore]] form: the plain path is the
-    * original single-WindowExec pass (all four sums share one
-    * partition/order spec), the wide path is the bucketed prefix-sum
-    * (the r15-verdict single-partition-window fix). Exact integers on
-    * both paths — identical bits. */
+    * + whole-frame windows every two-sample test below shares, as one
+    * [[Prefix.cumBefore]] WindowExec pass (all four sums share one
+    * partition/order spec). */
   private def sideCumGrid(df: DataFrame, sideCol: String, valCol: Column,
                           sideA: String, sideB: String): DataFrame = {
-    val wide = Prefix.isWide(df)
     val perValue = df.filter(col(sideCol).isin(sideA, sideB))
       .filter(valCol.isNotNull)
       .groupBy(valCol.as("__v"))
       .agg(sum(when(col(sideCol) === sideA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(sideCol) === sideB, 1L).otherwise(0L)).as("__cb"))
     Prefix.cumBefore(perValue, Nil, "__v", Seq("__ca", "__cb"),
-        wide = wide, withTotals = true)
+        withTotals = true)
       .select(col("__v"), col("__ca"), col("__cb"),
         (col("__cb___ca") + col("__ca")).as("__cuma"),
         (col("__cb___cb") + col("__cb")).as("__cumb"),
@@ -140,7 +136,7 @@ object Stats {
                    roundScale: Int = 6): DataFrame = {
     val grid = sideCumGrid(df, sideCol, col(valCol).cast("double"),
       sideA, sideB)
-    Prefix.leadAcross(grid, Nil, "__v", "__v", wide = Prefix.isWide(df))
+    Prefix.leadAcross(grid, Nil, "__v", "__v")
       .withColumn("__gap", col("__lead___v") - col("__v"))
       .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
         round(sum(abs(col("__cuma") / col("__na")
@@ -169,7 +165,7 @@ object Stats {
                      roundScale: Int = 6): DataFrame = {
     val grid = sideCumGrid(df, sideCol, col(valCol).cast("double"),
       sideA, sideB)
-    Prefix.leadAcross(grid, Nil, "__v", "__v", wide = Prefix.isWide(df))
+    Prefix.leadAcross(grid, Nil, "__v", "__v")
       .withColumn("__gap", col("__lead___v") - col("__v"))
       .withColumn("__d", col("__cuma") / col("__na")
         - col("__cumb") / col("__nb"))
@@ -842,7 +838,7 @@ object Stats {
     val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
       .withColumn("__sz", col("__cp") + col("__cn"))
     val blocks = Prefix.cumBefore(perScore, Nil, "__s", Seq("__sz"),
-        wide = Prefix.isWide(df), withTotals = true)
+        withTotals = true)
       .withColumn("__lo", col("__cb___sz"))
       .withColumn("__N", col("__tot___sz"))
       // doubled midrank and doubled contrary rank — both exact longs
@@ -1012,8 +1008,7 @@ object Stats {
     // (group size + 1)/2 — an exact half-integer
     val mid = col("__cb___ct").cast("double") +
       (col("__ct") + 1).cast("double") / 2.0
-    Prefix.cumBefore(perScore, Nil, "__s", Seq("__ct"),
-        wide = Prefix.isWide(df))
+    Prefix.cumBefore(perScore, Nil, "__s", Seq("__ct"))
       .withColumn("__mid", mid)
       .agg(sum(col("__cp")).as("n_pos"), sum(col("__cn")).as("n_neg"),
         sum(col("__mid") * col("__cp")).as("__rankSumPos"))
@@ -1045,7 +1040,7 @@ object Stats {
     val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
       .withColumn("__ct", col("__cp") + col("__cn"))
     Prefix.cumBefore(perScore, Nil, "__s", Seq("__cp", "__ct"),
-        desc = true, wide = Prefix.isWide(df))
+        desc = true)
       .withColumn("__tp", col("__cb___cp") + col("__cp"))
       .withColumn("__all", col("__cb___ct") + col("__ct"))
       .agg(sum(col("__cp")).as("n_pos"), sum(col("__cn")).as("n_neg"),
@@ -1265,8 +1260,7 @@ object Stats {
     val perAbs = d.groupBy(abs(col("__d")).as("__a"))
       .agg(sum(when(col("__d") > 0, 1L).otherwise(0L)).as("__cp"),
         count(lit(1)).as("__ct"))
-    val ranked = Prefix.cumBefore(perAbs, Nil, "__a", Seq("__ct"),
-        wide = Prefix.isWide(pairs))
+    val ranked = Prefix.cumBefore(perAbs, Nil, "__a", Seq("__ct"))
       .withColumn("__mid",
         col("__cb___ct").cast("double")
           + (col("__ct") + 1).cast("double") / 2.0)
@@ -1727,7 +1721,6 @@ object Stats {
     * Group order is `groupCol`'s natural ascending order. */
   def jonckheereTerpstra(df: DataFrame, groupCol: String, valCol: String,
                          roundScale: Int = 6): DataFrame = {
-    val wide = Prefix.isWide(df)
     val h = df.filter(col(valCol).isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), col(valCol).cast("double").as("__v"))
       .agg(count(lit(1)).as("__h"))
@@ -1739,12 +1732,9 @@ object Stats {
     val dense = values.crossJoin(groups)
       .join(h, Seq("__g", "__v"), "left")
       .withColumn("__hi", coalesce(col("__h"), lit(0L)))
-    // r16: scale-adaptive bucketed prefix-sum replaces the ≤k-task
-    // cumulative window over the dense (value × group) grid (the
-    // r15-verdict serial cliff); plain single-window form at bench SF.
-    // A_i(v⁻) = the exclusive cumsum directly. Exact integers.
-    val grid = Prefix.cumBefore(dense, Seq("__g"), "__v", Seq("__hi"),
-        wide = wide)
+    // A_i(v⁻) = the exclusive per-group cumsum over the dense grid
+    // directly. Exact integers.
+    val grid = Prefix.cumBefore(dense, Seq("__g"), "__v", Seq("__hi"))
       .select(col("__g").as("__gi"), col("__v"),
         col("__hi"), col("__cb___hi").as("__below"))
     val j = grid
@@ -2710,8 +2700,7 @@ object Stats {
       .agg(count(lit(1)).as("__c"))
       .cache()
     val perValue = vc.groupBy(col("__s")).agg(sum(col("__c")).as("__cv"))
-    val grid = Prefix.cumBefore(perValue, Nil, "__s", Seq("__cv"),
-        wide = Prefix.isWide(df))
+    val grid = Prefix.cumBefore(perValue, Nil, "__s", Seq("__cv"))
       .select(col("__s"), col("__cv"),
         (col("__cb___cv").cast("double")
           + (col("__cv") + 1).cast("double") / 2.0).as("__mid"))
@@ -2779,7 +2768,7 @@ object Stats {
       .agg(count(lit(1)).as("__n"), avg(v).as("__m"), var_samp(v).as("__s2"))
     def pick(c: String, arm: String, post: Boolean) =
       max(when(col(armCol) === arm && col("__post") === post, col(c)))
-    val wide = cells.agg(
+    val cellRow = cells.agg(
       pick("__n", treatArm, false).as("n_t_pre"),
       pick("__n", treatArm, true).as("n_t_post"),
       pick("__n", controlArm, false).as("n_c_pre"),
@@ -2798,7 +2787,7 @@ object Stats {
       + col("__v_t_pre") / col("n_t_pre")
       + col("__v_c_post") / col("n_c_post")
       + col("__v_c_pre") / col("n_c_pre"))
-    wide
+    cellRow
       .withColumn("did", round(did, 6))
       .withColumn("did_se", round(se, 6))
       .withColumn("t_stat",
@@ -2825,77 +2814,34 @@ object Stats {
     *
     * α defaults to 0.125 — DYADIC, so (n+1)·(1−α) is an exact IEEE
     * product and the ceil is engine-portable for every n. The order
-    * statistic is exact: the rank-r value is the smallest |resid| whose
-    * inclusive cumulative count reaches r over the distinct-|resid|
-    * grid — identical to a row_number probe (ties share a value, so tie
-    * order can't change the selected radius).
+    * statistic is exact: the row numbered r in |resid| order holds the
+    * r-th smallest |resid| (ties share a value, so tie order can't
+    * change the selected radius).
     *
-    * Scale shape (r16, the r15-verdict serial-cliff fix): residuals
-    * collapse to distinct (group, |resid|) cells (one hash aggregate —
-    * the old per-ROW row_number window sorted each group's full row set
-    * in one task at any scale), cumulative counts come from the bucketed
-    * prefix-sum over the cell grid, and the rank-r probe is a cumulative
-    * count-range filter — work ∝ distinct cells, every sort parallel. */
+    * Shape: one per-group row_number over the raw residuals, then an
+    * equi-join probe at rank r. A distinct-|resid| grid with a
+    * cumulative-count range probe was measured 1.4× slower at sf0.1
+    * (interleaved A/B) and is not used. */
   def conformalRadius(df: DataFrame, groupCol: String, residCol: String,
                       alpha: Double = 0.125): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1): $alpha")
-    if (!Prefix.isWide(df)) {
-      // bench-SF form: per-group row_number over the raw residuals —
-      // one ≤k-task sort, faster than the grid machinery below while a
-      // group's rows fit one scan split (interleaved A/B: the grid form
-      // ran 1.4× here)
-      val a = abs(col(residCol))
-      val w = Window.partitionBy(col(groupCol)).orderBy(a.asc)
-      val ranked = df.filter(col(residCol).isNotNull)
-        .select(col(groupCol), a.as("__a"),
-          row_number().over(w).cast("long").as("__rn"))
-      val stats = ranked.groupBy(col(groupCol))
-        .agg(count(lit(1)).as("n_cal"))
-        .withColumn("rank_r",
-          ceil((col("n_cal") + lit(1L)) * lit(1.0 - alpha)).cast("long"))
-      val probe = ranked.select(col(groupCol).as("__g"), col("__rn"),
-        col("__a"))
-      stats
-        .join(probe, col("__g") === col(groupCol) &&
-          col("__rn") === col("rank_r"), "left")
-        .select(col(groupCol), col("n_cal"), col("rank_r"),
-          round(col("__a"), 6).as("radius"))
-    } else {
-      // wide form (r16, the r15-verdict serial-cliff fix): residuals
-      // collapse to distinct (group, |resid|) cells, cumulative counts
-      // come from the bucketed prefix-sum, and the rank-r probe is a
-      // count-range filter — work ∝ distinct cells, every sort parallel
-      // (the old per-ROW window sorts each group's full row set in ONE
-      // task at any scale). The selected value is identical: the rank-r
-      // order statistic is the smallest |resid| whose inclusive
-      // cumulative count reaches r (ties share a value).
-      val grid = df.filter(col(residCol).isNotNull)
-        .groupBy(col(groupCol), abs(col(residCol)).as("__a"))
-        .agg(count(lit(1)).as("__c"))
-        // the bucketed-prefix branches make the cell grid
-        // multi-consumer — pin it instead of re-running the corpus
-        // aggregate per branch (multi-consumer rule)
-        .localCheckpoint()
-      val cum = Prefix.cumBefore(grid, Seq(groupCol), "__a", Seq("__c"),
-        wide = true)
-      val stats = grid.groupBy(col(groupCol))
-        .agg(sum(col("__c")).as("n_cal"))
-        .withColumn("rank_r",
-          ceil((col("n_cal") + lit(1L)) * lit(1.0 - alpha)).cast("long"))
-      // the rank-r row is the one whose count span covers rank_r:
-      // cumBefore < rank_r ≤ cumBefore + count (≤1 match per group;
-      // rank_r > n_cal → no match → null radius, groups too small to
-      // certify the level)
-      val probe = cum.select(col(groupCol).as("__g"), col("__a"),
-        col("__c"), col("__cb___c"))
-      stats
-        .join(probe, col("__g") === col(groupCol) &&
-          col("__cb___c") < col("rank_r") &&
-          col("rank_r") <= col("__cb___c") + col("__c"), "left")
-        .select(col(groupCol), col("n_cal"), col("rank_r"),
-          round(col("__a"), 6).as("radius"))
-    }
+    val a = abs(col(residCol))
+    val w = Window.partitionBy(col(groupCol)).orderBy(a.asc)
+    val ranked = df.filter(col(residCol).isNotNull)
+      .select(col(groupCol), a.as("__a"),
+        row_number().over(w).cast("long").as("__rn"))
+    val stats = ranked.groupBy(col(groupCol))
+      .agg(count(lit(1)).as("n_cal"))
+      .withColumn("rank_r",
+        ceil((col("n_cal") + lit(1L)) * lit(1.0 - alpha)).cast("long"))
+    val probe = ranked.select(col(groupCol).as("__g"), col("__rn"),
+      col("__a"))
+    stats
+      .join(probe, col("__g") === col(groupCol) &&
+        col("__rn") === col("rank_r"), "left")
+      .select(col(groupCol), col("n_cal"), col("rank_r"),
+        round(col("__a"), 6).as("radius"))
   }
 
   /** Per-group Spearman rank correlation (Spearman 1904): Pearson on
@@ -2921,7 +2867,6 @@ object Stats {
     * are excluded pairwise first, so ranks are over complete pairs. */
   def spearman(df: DataFrame, groupCol: String, xCol: String,
                yCol: String): DataFrame = {
-    val wide = Prefix.isWide(df)
     val cells = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(groupCol).as("__grp"), col(xCol).as("__x"),
@@ -2934,14 +2879,9 @@ object Stats {
       // of the 80.7 → 5.5 s win at the 100× tree
       .localCheckpoint()
     def axisRanks(vc: String, rn: String): DataFrame = {
-      // r16: scale-adaptive bucketed prefix-sum instead of one window
-      // partitioned by the ≤k-group key (≤k tasks at ANY scale — the
-      // r15-verdict serial cliff). Plain single-window form at bench SF
-      // (interleaved A/B measured the always-on bucketed form 1.19×
-      // there); exact integer cumsums — identical bits on both paths.
       val grid = cells.groupBy(col("__grp"), col(vc))
         .agg(sum(col("__c")).as("__cv"))
-      Prefix.cumBefore(grid, Seq("__grp"), vc, Seq("__cv"), wide = wide)
+      Prefix.cumBefore(grid, Seq("__grp"), vc, Seq("__cv"))
         .select(col("__grp"), col(vc),
           (col("__cb___cv") * 2L + col("__cv") + 1L).as(rn))
     }
@@ -3056,27 +2996,16 @@ object Stats {
     * k < 2 yield null. */
   def kruskalWallis(df: DataFrame, classCol: String, valCol: String,
                     roundScale: Int = 6): DataFrame = {
-    val wide = Prefix.isWide(df)
-    val vc0 = df
+    val vc = df
       .filter(col(classCol).isNotNull && col(valCol).isNotNull)
       .select(round(col(valCol).cast("double"), roundScale).as("__s"),
         col(classCol).as("__g"))
       .groupBy(col("__s"), col("__g"))
       .agg(count(lit(1)).as("__c"))
-    // wide only: the bucketed-prefix branches make the cell grid
-    // multi-consumer — checkpoint it once instead of re-deriving the
-    // corpus aggregate per branch (multi-consumer rule); plain path
-    // keeps the original two-consumer lineage uncheckpointed
-    val vc = if (wide) vc0.localCheckpoint() else vc0
     val perValue = vc.groupBy(col("__s")).agg(sum(col("__c")).as("__cv"))
-    // r16: scale-adaptive bucketed prefix-sum replaces the UNPARTITIONED
-    // cumulative window over the distinct-value grid (1 task at any
-    // scale — the r15-verdict serial cliff); plain single-window form at
-    // bench SF. Exact integer cumsum: identical bits on both paths.
     val mid = col("__cb___cv").cast("double") +
       (col("__cv") + 1).cast("double") / 2.0
-    val grid = Prefix.cumBefore(perValue, Nil, "__s", Seq("__cv"),
-        wide = wide)
+    val grid = Prefix.cumBefore(perValue, Nil, "__s", Seq("__cv"))
       .select(col("__s"), col("__cv"), mid.as("__mid"))
     val perClass = vc.join(grid, Seq("__s"))
       .groupBy(col("__g"))
@@ -3136,8 +3065,7 @@ object Stats {
       .withColumn("__ct", col("__cp") + col("__cn"))
     val mid = col("__cb___ct").cast("double") +
       (col("__ct") + 1).cast("double") / 2.0
-    val agg = Prefix.cumBefore(perScore, Nil, "__s", Seq("__ct"),
-        wide = Prefix.isWide(df))
+    val agg = Prefix.cumBefore(perScore, Nil, "__s", Seq("__ct"))
       .withColumn("__mid", mid)
       .agg(sum(col("__cp")).as("n_pos"), sum(col("__cn")).as("n_neg"),
         sum(col("__mid") * col("__cp")).as("__rp"),
@@ -3187,8 +3115,7 @@ object Stats {
     val perScore = perScoreCounts(df, scoreCol, labelCol, roundScale)
       .withColumn("__sz", col("__cp") + col("__cn"))
     val totals = perScore.agg(sum(col("__sz")).as("__N"))
-    val blocks = Prefix.cumBefore(perScore, Nil, "__s", Seq("__sz"),
-        wide = Prefix.isWide(df))
+    val blocks = Prefix.cumBefore(perScore, Nil, "__s", Seq("__sz"))
       .withColumn("__lo", col("__cb___sz"))
       .crossJoin(broadcast(totals))
       // block ranks [a, b]; scores min(r, m−r) with m = N+1 sum to an
@@ -3256,7 +3183,7 @@ object Stats {
     val totals = perScore.agg(sum(col("__ct")).as("__N"),
       sum(col("__cp")).as("__P"))
     val cum = Prefix.cumBefore(perScore, Nil, "__s", Seq("__cp", "__ct"),
-        desc = true, wide = Prefix.isWide(df))
+        desc = true)
       .withColumn("__cumN", col("__cb___ct") + col("__ct"))
       .withColumn("__cumP", col("__cb___cp") + col("__cp"))
       .crossJoin(broadcast(totals))
@@ -3688,9 +3615,9 @@ object Stats {
       .groupBy(round(col(valCol).cast("double"), roundScale).as("__v"))
       .agg(sum(wQuant).as("__w"))
     // both cumulative forms run over the aggregate-collapsed value grid
-    // (the mannWhitney/kendallW bounded-window contract), scale-adaptive
+    // (the mannWhitney/kendallW bounded-window contract)
     Prefix.cumBefore(grid, Nil, "__v", Seq("__w"),
-        wide = Prefix.isWide(df), withTotals = true)
+        withTotals = true)
       .withColumn("__cum", col("__cb___w") + col("__w"))
       .withColumn("__W", col("__tot___w"))
       .agg(coalesce(max(col("__W")), lit(0L)).as("total_weight"),
@@ -3966,7 +3893,7 @@ object Stats {
     val base = df.filter(col(valCol).isNotNull && col(groupCol).isNotNull)
     val grid = base.groupBy(v.as("__v")).agg(count(lit(1)).as("__w"))
     val med = Prefix.cumBefore(grid, Nil, "__v", Seq("__w"),
-        wide = Prefix.isWide(df), withTotals = true)
+        withTotals = true)
       .withColumn("__cum", col("__cb___w") + col("__w"))
       .withColumn("__W", col("__tot___w"))
       .agg(min(when(col("__cum") * 2 >= col("__W"), col("__v")))
@@ -4090,7 +4017,7 @@ object Stats {
       .groupBy(round(col("__va") - col("__vb"), roundScale).as("__d"))
       .agg(sum(col("__ca") * col("__cb")).as("__w"))
     Prefix.cumBefore(diffs, Nil, "__d", Seq("__w"),
-        wide = Prefix.isWide(df), withTotals = true)
+        withTotals = true)
       .withColumn("__cum", col("__cb___w") + col("__w"))
       .withColumn("__W", col("__tot___w"))
       .agg(coalesce(max(col("__W")), lit(0L)).as("n_pairs"),
@@ -4129,7 +4056,6 @@ object Stats {
     * mass); the single division happens once at the end. */
   def chatterjeeXi(df: DataFrame, groupCol: String, xCol: String,
                    yCol: String, roundScale: Int = 6): DataFrame = {
-    val wide = Prefix.isWide(df)
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val base = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("__g"), col(xCol).cast("double").as("__x"),
@@ -4137,13 +4063,11 @@ object Stats {
     // y-value CDF per group: cum = #{y' <= y}, l = n - cum + cy
     val yGrid = base.groupBy(col("__g"), col("__y"))
       .agg(count(lit(1)).as("__cy"))
-    // r16: scale-adaptive bucketed prefix-sum replaces the ≤k-task
-    // cumulative window AND the whole-group total window (both
-    // partitioned only by the group key — the r15-verdict serial cliff);
-    // plain single-window form at bench SF (always-on A/B'd 1.72×).
-    // Inclusive cum = exclusive + own count; exact integers both paths.
+    // the cumulative and whole-group total windows share one
+    // WindowExec pass. Inclusive cum = exclusive + own count; exact
+    // integers.
     val yCdf = Prefix.cumBefore(yGrid, Seq("__g"), "__y", Seq("__cy"),
-        wide = wide, withTotals = true)
+        withTotals = true)
       .withColumn("__cum", col("__cb___cy") + col("__cy"))
       .withColumn("__n", col("__tot___cy"))
       .select(col("__g"), col("__y"), col("__cy"), col("__cum"), col("__n"))
@@ -4165,11 +4089,8 @@ object Stats {
         Seq("__g", "__y"))
     val runs = cells.groupBy(col("__g"), col("__x"))
       .agg(min(col("__cum")).as("__lo"), max(col("__cum")).as("__hi"))
-    // r16: scale-adaptive bucketed lag replaces the ≤k-task x-sweep
-    // window (same serial-cliff fix as the y-CDF above); __hi is never
-    // null, so the cross-bucket fallback is exact
-    val sweep = Prefix.lagAcross(runs, Seq("__g"), "__x", "__hi",
-        wide = wide)
+    // x-sweep: each run's previous-x max cum, by a lag over x
+    val sweep = Prefix.lagAcross(runs, Seq("__g"), "__x", "__hi")
       .withColumn("__prevHi", col("__lag___hi"))
       .select(col("__g"),
         (col("__hi") - col("__lo")
@@ -4208,7 +4129,7 @@ object Stats {
         sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L))
           .as("__p"))
     val c = Prefix.cumBefore(grid, Nil, "__v", Seq("__c", "__p"),
-        wide = Prefix.isWide(df), withTotals = true)
+        withTotals = true)
       .withColumn("__tl", col("__cb___c") + col("__c"))
       .withColumn("__pl", col("__cb___p") + col("__p"))
       .withColumn("__n", col("__tot___c"))

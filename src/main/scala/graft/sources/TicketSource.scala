@@ -300,10 +300,15 @@ private[sources] class TicketScan(geUs: Long, leUs: Long, windowUs: Long,
   // runtime filter may be under-applied, never over-applied).
   private var runtimeInUs: Option[Set[Long]] = None
 
+  // Only a column the scan still outputs: Spark resolves these against
+  // the pruned read schema, so naming a pruned-away created_at fails
+  // planning of any equi-join over this scan.
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions
-      .column("created_at"))
+    if (required.fieldNames.contains("created_at"))
+      Array(org.apache.spark.sql.connector.expressions.Expressions
+        .column("created_at"))
+    else Array.empty
 
   private def toMicros(v: Any): Option[Long] = v match {
     case l: java.lang.Long => Some(l)

@@ -38,6 +38,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * [[GroupTopKRewrite]] applies it automatically to the idiomatic
   * row_number-filter pattern.
   *
+  * Measured against Spark's own WindowGroupLimit plan: interleaved A/B
+  * of q_topk_per_group in one JVM (local[4], 4 shuffle partitions, noop
+  * sink, 7 rep pairs), rewrite + strategy on vs off — median 0.48 s vs
+  * 0.60 s at sf0.1 (faster in 7 of 7 pairs) and 1.31 s vs 1.45 s on
+  * 10× orders (6 of 7). The operator stays.
+  *
   * Semantics: rows ranked per group by `sortOrder`; the k FIRST rows of
   * each group are emitted (group-clustered, rank-ordered within a group).
   * Make the sort order total (add an id tiebreak) for deterministic

@@ -47,7 +47,9 @@ class EntrySpec extends SparkSuite {
 
   test("every query runs and is non-empty at sf0.001") {
     val empties = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val n = fn(spark, sf).count()
+      // collect, not count(): count() lets Catalyst prune output
+      // expressions, so a broken output column would go unevaluated
+      val n = fn(spark, sf).collect().length
       if (n == 0) Some(name) else None
     }
     // q_embedding_pairs/q_lsh_neardup may legitimately be sparse, everything

@@ -672,8 +672,8 @@ class SimilaritySpec extends SparkSuite {
       .select($"bits").as[Seq[Long]].head() === Seq(5L))
     // dim 40 → two words, second holds 8 valid bits: all-positive vector
     // → w0 = 2³²−1, w1 = 2⁸−1 (valid-width mask, not a full word)
-    val wide = Seq((1L, Array.fill(40)(1.0f))).toDF("vec_id", "embedding")
-    assert(Similarity.binarize(wide, "vec_id", "embedding", 40)
+    val dim40 = Seq((1L, Array.fill(40)(1.0f))).toDF("vec_id", "embedding")
+    assert(Similarity.binarize(dim40, "vec_id", "embedding", 40)
       .select($"bits").as[Seq[Long]].head() === Seq((1L << 32) - 1, 255L))
     intercept[IllegalArgumentException] {
       Similarity.binarize(e, "vec_id", "embedding", 0)

@@ -72,8 +72,8 @@ class BisectTestTransport extends graft.sources.TicketTransport {
   override def fetchPage(geUs: Long, leUs: Long, page: Int,
                          limit: Int): Seq[TicketApi.Ticket] = {
     BisectTestTransport.calls.incrementAndGet()
-    val wide = (leUs - geUs) > maxSpanUs
-    if (wide && (failMode == "whole" || page >= 2)) throw TicketApi.ApiError(500)
+    val overSpan = (leUs - geUs) > maxSpanUs
+    if (overSpan && (failMode == "whole" || page >= 2)) throw TicketApi.ApiError(500)
     val lo = (page - 1) * limit
     inRange(geUs, leUs).slice(lo, lo + limit)
   }
@@ -379,5 +379,26 @@ class TicketSourceSpec extends SparkSuite {
       .join(probe, Seq("created_at"))
     assert(joined.count() ===
       full.count(r => probeKeys.contains(r.getTimestamp(0))))
+  }
+
+  test("Pipeline.run plans over an unpersisted scan whose pruned side drops created_at") {
+    import spark.implicits._
+    // The custom-field branch reads the same scan pruned to (uuid, number,
+    // requester_email); its left join is a runtime-filter candidate, so
+    // the scan must not name created_at once pruning removed it.
+    val tickets = read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z")
+      .select(col("uuid").as("id"), col("number"),
+        date_format(col("created_at"), "yyyy-MM-dd'T'HH:mm:ssXX").as("createdAt"),
+        array(struct(lit("cpf").as("key"), col("requester_email").as("value")))
+          .as("customField"))
+    val chats = Seq(("0", "c-0"), ("-1", "c-orphan"))
+      .toDF("evt_ticket_ticketNumber", "chat_id")
+    val dest = Seq.empty[String].toDF("n_ticket")
+    val out = Pipeline.run(tickets, chats, dest, uuidGen = lit("u"))
+    val n = TicketApi.countIn(TicketApi.parseIso("2024-01-01T00:00:00Z"),
+      TicketApi.parseIso("2024-01-02T00:00:00Z"))
+    // every ticket once (ticket 0 merged with its chat) plus the orphan chat
+    assert(out.collect().length === n + 1)
+    assert(out.columns.contains("ticket_cpf"))
   }
 }

@@ -15,11 +15,14 @@ set -euo pipefail
 ROUNDS=${1:-2}
 BASE=/root/repo/data_sf10
 WORK=/root/repo/graph_sf100
+REPO=$(cd "$(dirname "$0")/.." && pwd)
+# JVM heap: half of MemTotal, clamped to [2g, 8g]
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' </proc/meminfo)
 for i in $(seq 1 "$ROUNDS"); do
   for tree in exp_kcore_1m exp_kcore_8m; do
     sync; echo 3 > /proc/sys/vm/drop_caches
     echo "== round $i $tree =="
-    (cd "/root/repo/$tree" && SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=96g \
+    (cd "$REPO/$tree" && SPARK_GRAFT_CPUS="$(nproc)" SPARK_DRIVER_MEM="$HEAP" \
       sbt -batch "runMain graft.GraphScale $BASE 10 $WORK kcore" 2>&1 \
       | grep GRAPHSCALE | tee "/tmp/kcore_ab_${tree}_r${i}.log")
   done
