@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BitwiseCount, BitwiseXor, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** SparkSessionExtensions entry point: registers the native graft
@@ -51,7 +52,10 @@ object GraftExtensions {
     Seq(
       binary("graft_dot")(DotProductFloat(_, _)),
       binary("graft_cosine")(CosineSimilarityFloat(_, _)),
-      binary("graft_hamming64")(HammingDistance64(_, _)),
+      // popcount of XOR from built-ins: the same Catalyst form as
+      // VectorFunctions.hammingDistance, so SQL and Column API agree
+      binary("graft_hamming64")((a, b) =>
+        Cast(BitwiseCount(BitwiseXor(a, b)), LongType)),
       unary("graft_rolling_hash")(RollingHash(_)),
       binary("graft_jaro_winkler")(JaroWinkler(_, _)),
       unary("graft_strip_accents")(StripAccents(_)),

@@ -3336,8 +3336,8 @@ object SparkEntry {
     * main.py:85-87) → dotted-path flatten/rename (T7, the reference's
     * rename_map VERBATIM: tags_ticket, createdAt/updatedAt kept,
     * autor_ticket/email_ticket, status_ticket2, campo_custom_ticket/2) →
-    * whitelist custom-field pivot off campo_custom_ticket + enrichment
-    * join (T8/T9, one non-whitelisted key proves the filter) → casts +
+    * whitelist custom-field pivot off campo_custom_ticket on each ticket
+    * row (T8/T9, one non-whitelisted key proves the filter) → casts +
     * constant overwrite (T10/T11) → full-outer chat merge with collision
     * suffixing (T12 — `autor_ticket` exists on both sides) → key synthesis
     * for chat-only rows (T13, deterministic generator) → audit stamp (T14,

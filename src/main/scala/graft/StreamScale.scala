@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming scale probe (r12 verdict task #8, extended r14 task #6):
@@ -11,8 +10,8 @@ import org.apache.spark.sql.functions._
   * Modes (3rd arg):
   *  - `sessions` (default): statefulSessions over events; reports the
   *    final state-store rows/bytes (state ∝ keys claim).
-  *  - `dedup`: dedupedIngest of events into a fresh destination; reports
-  *    per-batch trigger durations as the destination grows — the
+  *  - `dedup`: dedupedIngestAtomic of events into a fresh destination;
+  *    reports per-batch trigger durations as the destination grows — the
   *    anti-join reads the destination's key column each batch, so the
   *    EXPECTED shape is per-batch cost ∝ destination size so far (the
   *    scaladoc's read-the-committed-keys contract), linear per batch,
@@ -34,12 +33,7 @@ object StreamScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mfpt = if (args.length > 1) args(1) else "2"
     val mode = if (args.length > 2) args(2) else "sessions"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     // the file stream source requires a DIRECTORY; driver testdata is a
@@ -87,16 +81,16 @@ object StreamScale {
           s""""state_bytes":${so.memoryUsedBytes},"batches":$batches}""")
 
       case "dedup" =>
-        val dest = java.nio.file.Files
-          .createTempDirectory("streamscale_dedup").toString + "/dest"
+        val work = java.nio.file.Files.createTempDirectory("streamscale_dedup")
+        val dest = s"$work/dest"
         val t0 = System.nanoTime()
         val q = graft.streaming.EventStreams
-          .dedupedIngest(eventStream(), dest, "event_id")
+          .dedupedIngestAtomic(eventStream(), dest, "event_id", s"$work/ckpt")
         q.processAllAvailable()
         val wall = (System.nanoTime() - t0) / 1e9
         val bt = batchTimes(q)
         q.stop()
-        val destRows = spark.read.parquet(dest).count()
+        val destRows = graft.operators.Sinks.readCommitted(spark, dest).count()
         println(s"""STREAMSCALE {"mode":"dedup","sf_dir":"$sfDir",""" +
           s""""batches":${bt.length},"dest_rows":$destRows,""" +
           s""""wall_sec":${"%.1f".format(wall)},""" +
@@ -108,16 +102,16 @@ object StreamScale {
           .parquet(s"$sfDir/documents.parquet").schema
         val stream = spark.readStream.schema(docSchema)
           .option("maxFilesPerTrigger", mfpt).parquet(streamDir("documents"))
-        val dest = java.nio.file.Files
-          .createTempDirectory("streamscale_neardup").toString + "/dest"
+        val work = java.nio.file.Files.createTempDirectory("streamscale_neardup")
+        val dest = s"$work/dest"
         val t0 = System.nanoTime()
         val q = graft.streaming.EventStreams
-          .nearDupIngest(stream, dest, "doc_id", "text")
+          .nearDupIngest(stream, dest, "doc_id", "text", s"$work/ckpt")
         q.processAllAvailable()
         val wall = (System.nanoTime() - t0) / 1e9
         val bt = batchTimes(q)
         q.stop()
-        val destRows = spark.read.parquet(dest).count()
+        val destRows = graft.operators.Sinks.readCommitted(spark, dest).count()
         val srcRows = spark.read.parquet(s"$sfDir/documents.parquet").count()
         println(s"""STREAMSCALE {"mode":"neardup","sf_dir":"$sfDir",""" +
           s""""batches":${bt.length},"src_rows":$srcRows,""" +

@@ -29,8 +29,10 @@ object VectorFunctions {
   def cosineSimilarity(a: Column, b: Column): Column = native.cosineSimilarity(a, b)
 
   /** Hamming distance between two 64-bit signature columns (SimHash
-    * distance): popcount of XOR, native codegen. */
-  def hammingDistance(a: Column, b: Column): Column = native.hammingDistance(a, b)
+    * distance): popcount of XOR, built-in expressions (the same form
+    * q_image_neardup and the SQL `graft_hamming64` use). */
+  def hammingDistance(a: Column, b: Column): Column =
+    bit_count(a.bitwiseXOR(b)).cast("long")
 
   /** Argmax-cosine cell over a sorted `(cell, cvec)` codebook COLUMN —
     * native kernel with the k-loop inside, so generated code is constant

@@ -8,36 +8,29 @@ import org.apache.spark.sql.types.StructType
   * The reference appends to a warehouse table with schema evolution
   * (reference/main.py:136-142, WRITE_APPEND + ALLOW_FIELD_ADDITION) and
   * creates the destination with a seed schema on first run
-  * (reference/main.py:127-134). Here the destination is a parquet path:
-  * appends are partition-parallel writes, schema evolution is parquet
-  * `mergeSchema` on read, and create-if-missing is an empty first write.
+  * (reference/main.py:127-134). Here the destination is a parquet root
+  * under the manifest commit protocol below: every append is
+  * [[appendAtomic]] (all or nothing, like a BigQuery load job), schema
+  * evolution is parquet `mergeSchema` over the committed files
+  * ([[readCommitted]]), and create-if-missing is an atomic empty first
+  * append.
   * (On a cluster the same calls target a Delta/Iceberg table and K3
   * becomes a real MERGE — Joins.upsert holds the set-oriented semantics.)
   */
 object Sinks {
 
-  /** K1: append a batch, tolerating new columns (schema evolution). The
-    * write itself is append-only and distributed; readers see the union
-    * schema via [[readEvolved]]. */
-  def appendEvolving(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
-
-  /** Read an evolved destination: union schema across all appended batches
-    * (absent columns null-backfilled), the ALLOW_FIELD_ADDITION read view. */
-  def readEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
   // ------------------------------------------------------- atomic commit
   //
   // Plain parquet append is NOT atomic: a writer that dies mid-job leaves
-  // partial part-files that directory-listing readers (readEvolved, the
-  // T16 anti-join) happily scan — the one failure mode the reference gets
-  // covered for free by BigQuery load jobs (reference/main.py:136-142
-  // blocks on job.result(); a failed load publishes nothing). The
-  // manifest protocol below restores that guarantee on a plain
-  // filesystem: each ATTEMPT writes to its own unique directory
-  // `data/<batchId>-<attemptId>/` (readers never list data/), and a batch
-  // becomes visible only when `_manifests/<batchId>.manifest` — naming
+  // partial part-files that directory-listing readers (a plain
+  // `spark.read.parquet`, the T16 anti-join) happily scan — the one
+  // failure mode the reference gets covered for free by BigQuery load
+  // jobs (reference/main.py:136-142 blocks on job.result(); a failed
+  // load publishes nothing). The manifest protocol below restores that
+  // guarantee on a plain filesystem: each ATTEMPT writes to its own
+  // unique directory `data/<batchId>-<attemptId>/` (readers never list
+  // data/), and a batch becomes visible only when
+  // `_manifests/<batchId>.manifest` — naming
   // that attempt's part-files — is published by a rename that FAILS if
   // the destination exists (FileContext + Options.Rename.NONE, the
   // create-fails-if-exists commit point lakehouse log stores use on
@@ -369,44 +362,16 @@ object Sinks {
     removed
   }
 
-  /** [[readEvolved]] over an atomic destination: union schema across the
-    * COMMITTED batches only — torn writes, in-flight batches and orphaned
-    * data dirs are invisible because readers resolve the manifest set,
-    * never the directory listing. */
+  /** Read an atomic destination: union schema across the COMMITTED
+    * batches (columns a batch lacks read as null — the
+    * ALLOW_FIELD_ADDITION read view). Torn writes, in-flight batches and
+    * orphaned data dirs are invisible because readers resolve the
+    * manifest set, never the directory listing. */
   def readCommitted(spark: SparkSession, root: String): DataFrame = {
     val files = committedFiles(spark, root)
     require(files.nonEmpty, s"no committed batches under $root")
     spark.read.option("mergeSchema", "true").parquet(files: _*)
   }
-
-  /** Format round-trip helpers: the engine is format-agnostic (any
-    * DataFrameReader source), but JSONL matters specifically because the
-    * reference's upstream is JSON documents — landing raw API pages as
-    * JSONL and reading them back with an enforced schema is the standard
-    * ingest layout. CSV requires the explicit schema (no type fidelity in
-    * the format itself). */
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).option("header", "true").csv(path)
-
-  /** ORC round-trip — the OTHER columnar warehouse format next to
-    * parquet: typed schema travels in the file, and filters/projections
-    * push down to stripes exactly like parquet row groups (SinksSpec
-    * pins PushedFilters in the scan plan). Interop surface for
-    * Hive-lineage warehouses. */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
 
   /** Write partitioned by a (low-cardinality, typically time-derived)
     * column: each value becomes a directory, and any query filtering on it
@@ -514,17 +479,12 @@ object Sinks {
 
   /** K2: create the destination with a seed schema iff missing; returns
     * true when it created. Mirrors get_table-or-create
-    * (reference/main.py:127-134): an empty write materializes the path
-    * with the seed schema so later appends/evolved reads line up. */
-  def createIfMissing(spark: SparkSession, path: String, seed: StructType): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(p)) false
-    else {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], seed)
-        .write.mode("overwrite").parquet(path)
-      true
-    }
-  }
+    * (reference/main.py:127-134): an empty frame with the seed schema is
+    * appended atomically under a fixed batch id, so the first call
+    * commits it and every later call is a replay that returns false.
+    * The empty write still leaves one part file carrying the schema, so
+    * [[readCommitted]] sees the seed columns before any data lands. */
+  def createIfMissing(spark: SparkSession, root: String, seed: StructType): Boolean =
+    appendAtomic(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], seed), root, "seed")
 }

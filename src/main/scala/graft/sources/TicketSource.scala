@@ -31,6 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    executors instead of the reference's sequential driver loop
   *  - per-page retry with exponential backoff inside the `PartitionReader`
   *    (≤3 attempts, 2^(n-1) backoff on 409/500, ticket.py:123-138)
+  *  - on a 5xx that outlives the retries, halving of the unread part of
+  *    the window down to a 1-hour floor (ticket.py:41-67)
   *  - short-page termination (ticket.py:145-146).
   *
   * The HTTP layer is behind the [[TicketTransport]] seam, bound via the
@@ -132,18 +134,6 @@ private[sources] class TicketScanBuilder(options: CaseInsensitiveStringMap)
   // short-page termination test (rows < pageSize) unsatisfiable
   private val pageSize: Int =
     math.max(1, math.min(Option(options.get("pageSize")).map(_.toInt).getOrElse(100), 100))
-  // opt-in adaptive window bisection (reference ticket.py:41-67): on
-  // retry-exhausted 5xx the reader splits the unseen remainder of its
-  // window in half down to a floor (default 1 hour, the reference's)
-  // instead of failing the task. Default OFF — fail-fast + Spark task
-  // retry — because the reference's floor behavior silently degrades
-  // to an empty slice (ticket.py:66-67); at the floor this reader
-  // still throws. See [[TicketPartitionReader]].
-  private val splitOnError: Boolean =
-    Option(options.get("splitOnError")).exists(_.toBoolean)
-  private val splitFloorUs: Long =
-    Option(options.get("splitFloorHours")).map(_.toLong).getOrElse(1L) *
-      3600L * 1000000L
   // transport binding: class name + the full option map it is configured
   // with, both plain-serializable so readers instantiate on executors
   private val transportClass: String =
@@ -256,8 +246,7 @@ private[sources] class TicketScanBuilder(options: CaseInsensitiveStringMap)
   private var aggExprs: Seq[TicketAgg] = Nil
 
   override def build(): Scan = new TicketScan(geUs, leUs, windowUs, pageSize,
-    limit, required, pushed, topN, aggExprs, transportClass, transportOpts,
-    splitOnError, splitFloorUs)
+    limit, required, pushed, topN, aggExprs, transportClass, transportOpts)
 }
 
 /** The three server-answerable aggregates of [[TicketScanBuilder]]'s
@@ -276,9 +265,7 @@ private[sources] class TicketScan(geUs: Long, leUs: Long, windowUs: Long,
                                   aggExprs: Seq[TicketAgg] = Nil,
                                   transportClass: String =
                                     classOf[InMemoryTicketTransport].getName,
-                                  transportOpts: Map[String, String] = Map.empty,
-                                  splitOnError: Boolean = false,
-                                  splitFloorUs: Long = 3600L * 1000000L)
+                                  transportOpts: Map[String, String] = Map.empty)
     extends Scan with Batch with SupportsRuntimeFiltering {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -351,7 +338,7 @@ private[sources] class TicketScan(geUs: Long, leUs: Long, windowUs: Long,
     if (aggExprs.nonEmpty)
       new TicketAggReaderFactory(aggExprs, transportClass, transportOpts)
     else new TicketReaderFactory(pageSize, limit, required, transportClass,
-      transportOpts, splitOnError, splitFloorUs)
+      transportOpts)
 }
 
 /** Readers for a pushed aggregation: one pre-aggregated row per window,
@@ -391,15 +378,12 @@ private[sources] case class TicketWindowPartition(loUs: Long, hiUs: Long)
 private[sources] class TicketReaderFactory(pageSize: Int, limit: Option[Int],
                                            required: StructType,
                                            transportClass: String,
-                                           transportOpts: Map[String, String],
-                                           splitOnError: Boolean = false,
-                                           splitFloorUs: Long = 3600L * 1000000L)
+                                           transportOpts: Map[String, String])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TicketPartitionReader(partition.asInstanceOf[TicketWindowPartition],
       pageSize, limit, required,
-      TicketTransport.instantiate(transportClass, transportOpts),
-      splitOnError, splitFloorUs)
+      TicketTransport.instantiate(transportClass, transportOpts))
 }
 
 /** Pages through one time window with the reference's retry/backoff loop
@@ -408,9 +392,9 @@ private[sources] class TicketReaderFactory(pageSize: Int, limit: Option[Int],
   * side of the [[TicketTransport]] seam — so every binding (in-memory or
   * live HTTP) gets the same ≤3-attempt 409/500 behavior.
   *
-  * With `splitOnError` (opt-in, reference ticket.py:41-67): when the
-  * retry budget exhausts on a 5xx, the reader bisects the remainder of
-  * its window resuming from the LAST EMITTED created_at INCLUSIVE —
+  * Window halving (reference ticket.py:41-67): when the retry budget
+  * exhausts on a 5xx, the reader bisects the remainder of its window
+  * resuming from the LAST EMITTED created_at INCLUSIVE —
   * rows at that timestamp are re-fetched and the already-emitted ones
   * skipped by uuid, so a failure landing inside a run of equal
   * created_at values spanning a page boundary loses nothing and
@@ -418,18 +402,18 @@ private[sources] class TicketReaderFactory(pageSize: Int, limit: Option[Int],
   * the uuids of the CURRENT equal-timestamp run, bounded by the tie
   * width at one microsecond — the reference has no such guarantee at
   * all: it DISCARDS prior pages on split, ticket.py:134-136) — and
-  * pages each half recursively, halving down to the `splitFloorUs`
-  * floor (1 hour by default, like the reference). At the floor the
-  * reader THROWS rather than degrade to an empty slice, deliberately
-  * replacing the reference's silent data loss (ticket.py:66-67) with
-  * task failure + Spark retry. */
+  * pages each half recursively, halving down to a fixed 1-hour floor
+  * (the reference's). At the floor the reader THROWS rather than
+  * degrade to an empty slice, deliberately replacing the reference's
+  * silent data loss (ticket.py:66-67) with task failure + Spark retry.
+  * A 409 (conflict) that exhausts its retries is not a window-size
+  * problem: it fails the task without halving. */
 private[sources] class TicketPartitionReader(part: TicketWindowPartition,
                                              pageSize: Int, limit: Option[Int],
                                              required: StructType,
-                                             transport: TicketTransport,
-                                             splitOnError: Boolean = false,
-                                             splitFloorUs: Long = 3600L * 1000000L)
+                                             transport: TicketTransport)
     extends PartitionReader[InternalRow] {
+  private val floorUs = 3600L * 1000000L
   private var emitted = 0
   private var current: TicketApi.Ticket = _
 
@@ -449,10 +433,10 @@ private[sources] class TicketPartitionReader(part: TicketWindowPartition,
   }
 
   /** Lazy ascending row stream over [loUs, hiUs]: pages until a short
-    * page; on retry-exhausted 5xx with splitOnError, swaps itself for
-    * the concatenation of two recursive halves of the unseen remainder
-    * (see the class doc). Non-5xx errors, and any error with
-    * splitOnError off, propagate and fail the task. */
+    * page; on retry-exhausted 5xx, swaps itself for the concatenation
+    * of two recursive halves of the unseen remainder (see the class
+    * doc). Non-5xx errors, and a 5xx at the floor, propagate and fail
+    * the task. */
   private def windowRows(loUs: Long, hiUs: Long): Iterator[TicketApi.Ticket] =
     new Iterator[TicketApi.Ticket] {
       private var page = 1
@@ -476,9 +460,9 @@ private[sources] class TicketPartitionReader(part: TicketWindowPartition,
             page += 1
             buf = rows.iterator
           } catch {
-            case e: TicketApi.ApiError if splitOnError && e.code >= 500 =>
+            case e: TicketApi.ApiError if e.code >= 500 =>
               val resumeLo = math.max(loUs, lastUs)
-              if (hiUs - resumeLo + 1 <= splitFloorUs) throw e // at the floor
+              if (hiUs - resumeLo + 1 <= floorUs) throw e // at the floor
               val mid = resumeLo + (hiUs - resumeLo) / 2
               // freeze the skip set at the failure point: the fallback
               // owns emission from here on, so this level's run of

@@ -96,7 +96,7 @@ object EventStreams {
     * reference types and the types observed in any window, with p_ref
     * coalesced to 0 for ref-absent types).
     * In streaming, run it over the aggregated sink inside `foreachBatch`
-    * (the [[dedupedIngest]] composition pattern) — chaining a second
+    * (the [[dedupedIngestAtomic]] composition pattern) — chaining a second
     * aggregation inside the same streaming query is not supported;
     * StreamingSpec pins streaming-counts→finalizer ≡ batch twin.
     *
@@ -133,16 +133,6 @@ object EventStreams {
       .agg(max(col("__wt")).as("n_events"),
         round(sum(half(pw) + half(col("p_ref"))), 6).as("jsd"))
   }
-
-  /** Session windows with a gap timeout (streaming-native sessionization;
-    * the batch twin is SparkEntry.q_sessionize's lag/sum formulation). */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"), col("user_id"),
-        col("n_events"))
 
   /** Session spans via Spark's native `session_window`: one row per
     * (user, session) with start (first event ts), end (last event ts + gap)
@@ -355,31 +345,13 @@ object EventStreams {
 
   /** Streaming ingestion with cross-batch dedup against the destination —
     * the reference's dedupe-then-append flow (manutencao.py T16 +
-    * main.py K1) as a streaming sink: each micro-batch anti-joins the
-    * destination's current keys and appends only unseen rows, so replayed
-    * or overlapping batches (at-least-once sources) ingest idempotently.
-    * `foreachBatch` is the standard bridge from a stream to batch-only
-    * sinks/joins; the dedup is a broadcast anti-join on the key column. */
-  def dedupedIngest(stream: DataFrame, destPath: String, keyCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fresh =
-          if (new java.io.File(destPath).exists())
-            graft.operators.Joins.dedupAgainst(
-              batch, graft.operators.Sinks.readEvolved(spark, destPath), Seq(keyCol))
-          else batch
-        graft.operators.Sinks.appendEvolving(fresh, destPath)
-      }
-      .start()
-
-  /** [[dedupedIngest]] with warehouse-grade commit semantics: each
-    * micro-batch anti-joins the COMMITTED destination state
-    * ([[graft.operators.Sinks.readCommitted]]) and appends via the
-    * manifest protocol ([[graft.operators.Sinks.appendAtomic]]), keyed
-    * on Structured Streaming's epoch id. Epoch ids are stable across
+    * main.py K1) as a streaming sink. `foreachBatch` is the standard
+    * bridge from a stream to batch-only sinks/joins: each micro-batch
+    * anti-joins the COMMITTED destination state
+    * ([[graft.operators.Sinks.readCommitted]]) on the key column and
+    * appends only unseen rows via the manifest protocol
+    * ([[graft.operators.Sinks.appendAtomic]]), keyed on Structured
+    * Streaming's epoch id. Epoch ids are stable across
     * restarts ONLY under a durable checkpoint — without one Spark falls
     * back to a temporary checkpoint, epoch ids restart at 0 with
     * different batch composition, and the manifest's replay check turns
@@ -398,57 +370,64 @@ object EventStreams {
   def dedupedIngestAtomic(stream: DataFrame, destRoot: String, keyCol: String,
                           checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestAtomic(stream, destRoot, checkpointDir) { (batch, dest) =>
+      dest.fold(batch)(graft.operators.Joins.dedupAgainst(batch, _, Seq(keyCol)))
+    }
+
+  /** The commit path both ingests share: per micro-batch, `admit` turns
+    * the batch and the committed destination (None before the first
+    * commit) into the rows to append, which go in atomically under the
+    * epoch id. */
+  private def ingestAtomic(stream: DataFrame, destRoot: String,
+                           checkpointDir: String)(
+      admit: (DataFrame, Option[DataFrame]) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val spark = batch.sparkSession
-        val fresh =
-          if (graft.operators.Sinks.committedFiles(spark, destRoot).nonEmpty)
-            graft.operators.Joins.dedupAgainst(
-              batch, graft.operators.Sinks.readCommitted(spark, destRoot),
-              Seq(keyCol))
-          else batch
+        val dest =
+          if (graft.operators.Sinks.committedFiles(spark, destRoot).isEmpty) None
+          else Some(graft.operators.Sinks.readCommitted(spark, destRoot))
         graft.operators.Sinks.appendAtomic(
-          fresh, destRoot, f"epoch-$epochId%012d")
+          admit(batch, dest), destRoot, f"epoch-$epochId%012d")
         ()
       }
       .start()
 
-  /** Streaming NEAR-dup ingestion — [[dedupedIngest]]'s fuzzy sibling:
-    * each micro-batch first drops exact id replays against the
-    * destination (idempotent at-least-once ingest), then runs the
-    * incremental MinHash-LSH admission
-    * ([[graft.operators.Dedup.admitNearDups]]): batch docs that are
-    * near-duplicates of an accepted destination doc — or of a lower-id
-    * doc in the same batch — are rejected, survivors append. Per-batch
-    * work ∝ batch (the destination contributes one band equi-join +
-    * candidate token lookups), mirroring incrementalClusters'
-    * batch-incremental contract; the batch twin q_neardup_admit runs the
-    * identical admission over a 2-batch replay of the documents table
-    * and is oracle-checked end-to-end (band hashes, Jaccard re-rank,
-    * keep-first admission). StreamingSpec pins stream == batch-twin on
-    * the same split. */
-  def nearDupIngest(stream: DataFrame, destPath: String, idCol: String,
-                    textCol: String, numHashes: Int = 16,
-                    rowsPerBand: Int = 4, threshold: Double = 0.5)
+  /** Streaming NEAR-dup ingestion — [[dedupedIngestAtomic]]'s fuzzy
+    * sibling, on the same commit path: each micro-batch first drops
+    * exact id replays against the committed destination (idempotent
+    * at-least-once ingest), then runs the incremental MinHash-LSH
+    * admission ([[graft.operators.Dedup.admitNearDups]]): batch docs
+    * that are near-duplicates of an accepted destination doc — or of a
+    * lower-id doc in the same batch — are rejected, survivors append
+    * atomically under the epoch id. `checkpointDir` is required for the
+    * reason [[dedupedIngestAtomic]] gives: only a durable checkpoint
+    * keeps epoch ids stable across restarts, and an unstable epoch id
+    * turns the manifest's replay check into silent batch loss.
+    * Per-batch work ∝ batch (the destination contributes one band
+    * equi-join + candidate token lookups), mirroring
+    * incrementalClusters' batch-incremental contract; the batch twin
+    * q_neardup_admit runs the identical admission over a 2-batch replay
+    * of the documents table and is oracle-checked end-to-end (band
+    * hashes, Jaccard re-rank, keep-first admission). StreamingSpec pins
+    * stream == batch-twin on the same split. */
+  def nearDupIngest(stream: DataFrame, destRoot: String, idCol: String,
+                    textCol: String, checkpointDir: String,
+                    numHashes: Int = 16, rowsPerBand: Int = 4,
+                    threshold: Double = 0.5)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fresh =
-          if (new java.io.File(destPath).exists()) {
-            val dest = graft.operators.Sinks.readEvolved(spark, destPath)
-            val unseen = graft.operators.Joins.dedupAgainst(batch, dest, Seq(idCol))
-            graft.operators.Dedup.admitNearDups(unseen, dest, idCol, textCol,
-              numHashes, rowsPerBand, threshold)
-          } else
-            graft.operators.Dedup.admitNearDups(batch, batch.filter(lit(false)),
-              idCol, textCol, numHashes, rowsPerBand, threshold)
-        graft.operators.Sinks.appendEvolving(fresh, destPath)
-      }
-      .start()
+    ingestAtomic(stream, destRoot, checkpointDir) {
+      case (batch, Some(dest)) =>
+        graft.operators.Dedup.admitNearDups(
+          graft.operators.Joins.dedupAgainst(batch, dest, Seq(idCol)), dest,
+          idCol, textCol, numHashes, rowsPerBand, threshold)
+      case (batch, None) =>
+        graft.operators.Dedup.admitNearDups(batch, batch.filter(lit(false)),
+          idCol, textCol, numHashes, rowsPerBand, threshold)
+    }
 
   /** Streaming CUSUM anomaly monitor — the live face of
     * [[graft.operators.TimeSeries.cusumDaily]]: each micro-batch folds
@@ -471,7 +450,7 @@ object EventStreams {
     * overwrite (read-then-overwrite on the same path needs the read
     * finished first). At-least-once caveat: day-count folding ADDS, so
     * a replayed batch double-counts — feed this from an exactly-once
-    * source or compose with [[dedupedIngest]]'s anti-join upstream
+    * source or compose with [[dedupedIngestAtomic]]'s anti-join upstream
     * (how StreamingSpec's replay case runs it). */
   def cusumMonitor(stream: DataFrame, statePath: String,
                    tsCol: String = "ts", slackSigmas: Double = 0.5,
@@ -510,7 +489,7 @@ object EventStreams {
     * row per day. Peeking safety carries over verbatim: p_always_valid
     * is monotone, so the stream can alarm at ANY micro-batch without
     * α-inflation. Same at-least-once caveat as [[cusumMonitor]]:
-    * count folding adds, so route replays through [[dedupedIngest]]
+    * count folding adds, so route replays through [[dedupedIngestAtomic]]
     * upstream. */
   def msprtMonitor(stream: DataFrame, statePath: String,
                    tsCol: String = "ts", typeCol: String = "event_type",

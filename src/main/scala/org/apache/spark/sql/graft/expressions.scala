@@ -224,27 +224,6 @@ object expressions {
       copy(child = newChild)
   }
 
-  /** Hamming distance between two 64-bit signatures (SimHash distance):
-    * popcount of the XOR. */
-  case class HammingDistance64(left: Expression, right: Expression)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
-    override def dataType: DataType = LongType
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "graft_hamming64"
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Long.bitCount(a.asInstanceOf[Long] ^ b.asInstanceOf[Long]).toLong
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = (long) java.lang.Long.bitCount($a ^ $b);")
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
   /** Unicode normalization (NFC/NFD/NFKC/NFKD via `java.text.Normalizer`)
     * as a codegen'd expression — Spark has no built-in for this, yet it is
     * the mandatory first step of any web-corpus canonicalization: the same
@@ -668,9 +647,6 @@ object expressions {
 
   def rollingHash(c: Column): Column =
     ExpressionUtils.column(RollingHash(toExpr(c)))
-
-  def hammingDistance(a: Column, b: Column): Column =
-    ExpressionUtils.column(HammingDistance64(toExpr(a), toExpr(b)))
 
   def unicodeNormalize(c: Column, form: String = "NFC"): Column =
     ExpressionUtils.column(UnicodeNormalize(toExpr(c), form))

@@ -62,9 +62,38 @@ class PipelineSpec extends SparkSuite {
 
     // and the result appends onto the evolved destination
     val path = java.nio.file.Files.createTempDirectory("pipe-").toString + "/dest"
-    Sinks.appendEvolving(dest, path)
-    Sinks.appendEvolving(out.withColumn("upload", lit("2024-01-04")), path)
-    assert(Sinks.readEvolved(spark, path).count() === 3)
+    assert(Sinks.appendAtomic(dest, path, "day-1"))
+    assert(Sinks.appendAtomic(out.withColumn("upload", lit("2024-01-04")), path, "day-2"))
+    assert(Sinks.readCommitted(spark, path).count() === 3)
+  }
+
+  test("tickets sharing a blank id are not cross-joined by the custom-field extraction") {
+    val three = spark.read.json(Seq(
+      """{"id":"","number":201,"customField":[{"key":"cpf","value":"1"}]}""",
+      """{"id":"","number":202,"customField":[{"key":"cpf","value":"2"}]}""",
+      """{"id":"t3","number":203,"customField":[{"key":"cpf","value":"3"}]}""").toDS())
+    val out = Pipeline.run(three, chats.limit(0),
+      Seq.empty[(String, String)].toDF("uuid", "n_ticket"), uuidGen = lit("gen"))
+    val got = out.select("n_ticket", "ticket_cpf").as[(String, String)].collect()
+    assert(got.sorted.toSeq === Seq(("201", "1"), ("202", "2"), ("203", "3")),
+      "one row per ticket, each with its own custom fields")
+  }
+
+  test("the pipeline's queries return the same rows with AQE on and off") {
+    // bench and Verify run adaptive; the non-adaptive plans of the
+    // reference-flow queries are checked against them here
+    val key = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.getOption(key)
+    def rows(q: String, adaptive: Boolean): Map[org.apache.spark.sql.Row, Int] = {
+      spark.conf.set(key, adaptive.toString)
+      SparkEntry.queries(q)(spark, sf).collect().toSeq
+        .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    }
+    try Seq("q_octadesk_e2e", "q_octadesk_e2e_drift", "q_custom_fields",
+        "q_left_join", "q_full_outer_merge", "q_anti_dedup", "q_upsert")
+      .foreach(q => assert(rows(q, adaptive = true) === rows(q, adaptive = false),
+        s"$q: AQE-off rows differ from AQE-on rows"))
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("empty ticket source: chat rows still flow (E1 guard shape)") {

@@ -20,26 +20,9 @@ class SinksSpec extends SparkSuite {
     val path = tempPath()
     assert(Sinks.createIfMissing(spark, path, seed))
     assert(!Sinks.createIfMissing(spark, path, seed)) // second call: no-op
-    val dest = Sinks.readEvolved(spark, path)
+    val dest = Sinks.readCommitted(spark, path)
     assert(dest.schema.fieldNames.toSeq === Seq("chat_id", "n_ticket"))
     assert(dest.count() === 0)
-  }
-
-  test("appendEvolving + readEvolved: union schema, null backfill") {
-    val path = tempPath()
-    Sinks.createIfMissing(spark, path, seed)
-    Sinks.appendEvolving(Seq(("c1", "t1")).toDF("chat_id", "n_ticket"), path)
-    // second batch brings a NEW column (ALLOW_FIELD_ADDITION)
-    Sinks.appendEvolving(
-      Seq(("c2", "t2", "open")).toDF("chat_id", "n_ticket", "status"), path)
-    val dest = Sinks.readEvolved(spark, path)
-    assert(dest.schema.fieldNames.toSet === Set("chat_id", "n_ticket", "status"))
-    assert(dest.count() === 2)
-    val byChat = dest.collect().map(r =>
-      r.getString(r.fieldIndex("chat_id")) ->
-        Option(r.get(r.fieldIndex("status")))).toMap
-    assert(byChat("c1") === None)          // old rows: new column null
-    assert(byChat("c2") === Some("open"))
   }
 
   test("appendAtomic: torn writes invisible, replay idempotent, schema evolves") {
@@ -242,41 +225,6 @@ class SinksSpec extends SparkSuite {
       "committed data unaffected by the vacuum")
   }
 
-  test("jsonl and csv round-trip with schema fidelity") {
-    val orders = Tables.orders(spark, sf)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      .limit(500)
-    val schema = orders.schema
-    val base = java.nio.file.Files.createTempDirectory("graft-fmt-").toString
-
-    Sinks.writeJsonl(orders, s"$base/jsonl")
-    val fromJson = Sinks.readJsonl(spark, s"$base/jsonl", schema)
-    assert(fromJson.schema === schema)
-    assert(fromJson.exceptAll(orders).isEmpty && orders.exceptAll(fromJson).isEmpty)
-
-    Sinks.writeCsv(orders, s"$base/csv")
-    val fromCsv = Sinks.readCsv(spark, s"$base/csv", schema)
-    assert(fromCsv.schema === schema)
-    assert(fromCsv.exceptAll(orders).isEmpty && orders.exceptAll(fromCsv).isEmpty)
-  }
-
-  test("orc round-trip: schema travels in the file, filters push down") {
-    val orders = Tables.orders(spark, sf)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      .limit(500)
-    val base = java.nio.file.Files.createTempDirectory("graft-orc-").toString
-    Sinks.writeOrc(orders, s"$base/orc")
-    val back = Sinks.readOrc(spark, s"$base/orc")
-    // no schema argument needed — ORC carries the types
-    assert(back.schema === orders.schema)
-    assert(back.exceptAll(orders).isEmpty && orders.exceptAll(back).isEmpty)
-    // predicate reaches the ORC scan like a parquet PushedFilters
-    val plan = back.filter(col("o_orderkey") < 100L)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(o_orderkey), " +
-      "LessThan(o_orderkey,100)]"), plan.take(600))
-  }
-
   test("writeSorted: disjoint per-file ranges, sorted within each file") {
     val path = tempPath()
     // shuffled input so the layout is earned, not inherited
@@ -368,10 +316,12 @@ class SinksSpec extends SparkSuite {
 
   test("dedup-vs-destination composes with the evolved read (reference flow)") {
     val path = tempPath()
-    Sinks.appendEvolving(Seq(("c1", "t1")).toDF("chat_id", "n_ticket"), path)
+    Sinks.createIfMissing(spark, path, seed)
+    assert(Sinks.appendAtomic(
+      Seq(("c1", "t1")).toDF("chat_id", "n_ticket"), path, "b1"))
     val batch = Seq(("c1", "t1"), ("c3", "t3")).toDF("chat_id", "n_ticket")
     val fresh = graft.operators.Joins.dedupAgainst(
-      batch, Sinks.readEvolved(spark, path), Seq("n_ticket"))
+      batch, Sinks.readCommitted(spark, path), Seq("n_ticket"))
     assert(fresh.select("n_ticket").as[String].collect().toSeq === Seq("t3"))
   }
 }

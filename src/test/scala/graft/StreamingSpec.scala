@@ -157,24 +157,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("dedupedIngest is idempotent across replayed micro-batches") {
-    // landing dir with the SAME file twice → two identical micro-batches
-    val landing = java.nio.file.Files.createTempDirectory("graft-landing-")
-    val src = java.nio.file.Paths.get(s"$sf/events.parquet")
-    java.nio.file.Files.copy(src, landing.resolve("batch1.parquet"))
-    java.nio.file.Files.copy(src, landing.resolve("batch2.parquet"))
-    val dest = java.nio.file.Files.createTempDirectory("graft-ingest-").toString + "/dest"
-
-    val stream = EventStreams.readEventStream(spark, landing.toString,
-      Tables.rawEventSchema(spark, sf), maxFilesPerTrigger = Some(1))
-    val q = EventStreams.dedupedIngest(stream, dest, "event_id")
-    try q.processAllAvailable() finally q.stop()
-
-    val n = Tables.events(spark, sf).count()
-    assert(spark.read.parquet(dest).count() === n,
-      "replayed batch must dedup to zero new rows")
-  }
-
   test("dedupedIngestAtomic: replayed batches dedup, torn writes stay invisible") {
     val landing = java.nio.file.Files.createTempDirectory("graft-landing-")
     val src = java.nio.file.Paths.get(s"$sf/events.parquet")
@@ -276,11 +258,12 @@ class StreamingSpec extends SparkSuite {
       .as[(Long, String)].collect()
     val b1 = docs.filter(_._1 < 60).toSeq
     val b2 = docs.filter(t => t._1 >= 60 && t._1 < 120).toSeq
-    val dest = java.nio.file.Files.createTempDirectory("graft-neardup-")
-      .resolve("dest").toString
+    val work = java.nio.file.Files.createTempDirectory("graft-neardup-")
+    val dest = work.resolve("dest").toString
     val ms = MemoryStream[(Long, String)]
     val input = ms.toDF().toDF("doc_id", "text")
     val q = EventStreams.nearDupIngest(input, dest, "doc_id", "text",
+      work.resolve("ckpt").toString,
       numHashes = 16, rowsPerBand = 4, threshold = 0.3)
     try {
       ms.addData(b1: _*)
@@ -292,7 +275,8 @@ class StreamingSpec extends SparkSuite {
       ms.addData((b1 ++ b2): _*)
       q.processAllAvailable()
     } finally q.stop()
-    val streamed = spark.read.parquet(dest).select("doc_id").as[Long].collect()
+    val streamed = graft.operators.Sinks.readCommitted(spark, dest)
+      .select("doc_id").as[Long].collect()
     assert(streamed.length === streamed.toSet.size, "replay must not duplicate")
     val twin = SparkEntry.queries("q_neardup_admit")(spark, sf)
       .select("doc_id").as[Long].collect().toSet

@@ -42,9 +42,10 @@ object CountingTestTransport {
 /** Bisection-test transport: a deterministic dataset (ticket k at
   * anchor + k·step) served page-by-page, with an injectable failure
   * policy keyed on the REQUESTED span — `maxspanminutes` makes any
-  * wider window 500 (mode "whole": every page; mode "page2": page 1
-  * serves, later pages 500, exercising the mid-pagination resume
-  * bound). Stateless per request, so recursive halves replay cleanly. */
+  * wider window fail (mode "whole": every page; mode "page2": page 1
+  * serves, later pages fail, exercising the mid-pagination resume
+  * bound) with HTTP status `failcode` (default 500). Stateless per
+  * request, so recursive halves replay cleanly. */
 class BisectTestTransport extends graft.sources.TicketTransport {
   private var n = 0L
   private var stepUs = 0L
@@ -52,6 +53,7 @@ class BisectTestTransport extends graft.sources.TicketTransport {
   private var maxSpanUs = Long.MaxValue
   private var failMode = "whole"
   private var tieSize = 1L
+  private var failCode = 500
   override def configure(options: Map[String, String]): Unit = {
     n = options.getOrElse("testtickets", "0").toLong
     stepUs = options.getOrElse("stepminutes", "30").toLong * 60L * 1000000L
@@ -64,6 +66,7 @@ class BisectTestTransport extends graft.sources.TicketTransport {
     // created_at — the equal-timestamp regime the inclusive resume
     // bound exists for
     tieSize = options.getOrElse("tiesize", "1").toLong
+    failCode = options.getOrElse("failcode", "500").toInt
   }
   private def inRange(geUs: Long, leUs: Long): Seq[TicketApi.Ticket] =
     (0L until n).map(k => TicketApi.Ticket(s"bsct-$k", k,
@@ -73,7 +76,7 @@ class BisectTestTransport extends graft.sources.TicketTransport {
                          limit: Int): Seq[TicketApi.Ticket] = {
     BisectTestTransport.calls.incrementAndGet()
     val overSpan = (leUs - geUs) > maxSpanUs
-    if (overSpan && (failMode == "whole" || page >= 2)) throw TicketApi.ApiError(500)
+    if (overSpan && (failMode == "whole" || page >= 2)) throw TicketApi.ApiError(failCode)
     val lo = (page - 1) * limit
     inRange(geUs, leUs).slice(lo, lo + limit)
   }
@@ -171,10 +174,10 @@ class TicketSourceSpec extends SparkSuite {
     assert(clean === (0L until 40L), "clean-run sanity")
 
     // any window wider than 6 h 500s EVERY page → the 24 h partition
-    // fails, splitOnError bisects 24→12→6 h and the 6 h quarters serve
+    // fails, the reader bisects 24→12→6 h and the 6 h quarters serve
     BisectTestTransport.calls.set(0L)
     val healed = read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z",
-      (base ++ Seq("maxspanminutes" -> "360", "splitOnError" -> "true")): _*)
+      (base :+ ("maxspanminutes" -> "360")): _*)
       .collect()
     assert(healed.map(_.getLong(1)).toSeq === clean,
       "bisected read must yield exactly the clean run's rows, in order")
@@ -191,8 +194,7 @@ class TicketSourceSpec extends SparkSuite {
     val healed = read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z",
       "transport" -> classOf[BisectTestTransport].getName,
       "testtickets" -> "40", "stepminutes" -> "30", "pageSize" -> "10",
-      "maxspanminutes" -> "360", "failmode" -> "page2",
-      "splitOnError" -> "true").collect()
+      "maxspanminutes" -> "360", "failmode" -> "page2").collect()
     assert(healed.map(_.getLong(1)).toSeq === (0L until 40L),
       "all 40 rows exactly once, ascending — emitted prefixes never replayed")
   }
@@ -206,25 +208,32 @@ class TicketSourceSpec extends SparkSuite {
     val healed = read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z",
       "transport" -> classOf[BisectTestTransport].getName,
       "testtickets" -> "40", "stepminutes" -> "30", "tiesize" -> "4",
-      "pageSize" -> "10", "maxspanminutes" -> "360", "failmode" -> "page2",
-      "splitOnError" -> "true").collect()
+      "pageSize" -> "10", "maxspanminutes" -> "360", "failmode" -> "page2")
+      .collect()
     assert(healed.map(_.getLong(1)).toSeq === (0L until 40L),
       "all 40 rows exactly once, ascending — the equal-timestamp run " +
         "spanning the failed page boundary must neither drop nor replay")
   }
 
-  test("splitOnError is opt-in: default fails the task on retry-exhausted 5xx") {
+  test("a 409 that exhausts its retries fails the task and is not halved") {
+    // the same wide-window failure that halving heals for a 500 (first
+    // test above), served as a 409: a conflict is not a window-size
+    // problem, so the reader must not bisect it away
+    BisectTestTransport.calls.set(0L)
     val ex = intercept[org.apache.spark.SparkException] {
       read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z",
         "transport" -> classOf[BisectTestTransport].getName,
-        "testtickets" -> "40", "maxspanminutes" -> "360").collect()
+        "testtickets" -> "40", "maxspanminutes" -> "360",
+        "failcode" -> "409").collect()
     }
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)
     assert(causes(ex).exists {
-      case TicketApi.ApiError(500) => true
+      case TicketApi.ApiError(409) => true
       case _ => false
-    }, s"expected the 500 to propagate, got: $ex")
+    }, s"expected the 409 to propagate, got: $ex")
+    assert(BisectTestTransport.calls.get() === 3L,
+      "three attempts at the one window's first page, no halved window requested")
   }
 
   test("splitOnError: at the floor the reader throws, never degrades to empty") {
@@ -235,8 +244,7 @@ class TicketSourceSpec extends SparkSuite {
     intercept[org.apache.spark.SparkException] {
       read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z",
         "transport" -> classOf[BisectTestTransport].getName,
-        "testtickets" -> "40", "maxspanminutes" -> "0",
-        "splitOnError" -> "true").collect()
+        "testtickets" -> "40", "maxspanminutes" -> "0").collect()
     }
     // lazy leftmost descent: depth ≈ log2(24) ≈ 5 levels × ≤3 retry
     // attempts — bounded, no exponential fan-out before failing
@@ -383,9 +391,10 @@ class TicketSourceSpec extends SparkSuite {
 
   test("Pipeline.run plans over an unpersisted scan whose pruned side drops created_at") {
     import spark.implicits._
-    // The custom-field branch reads the same scan pruned to (uuid, number,
-    // requester_email); its left join is a runtime-filter candidate, so
-    // the scan must not name created_at once pruning removed it.
+    // The custom fields are extracted on the ticket rows themselves, so
+    // the plan must read the scan once: a second, pruned copy joined
+    // back on the ticket id would page the API twice and cross-join
+    // tickets that share an id.
     val tickets = read("2024-01-01T00:00:00Z", "2024-01-02T00:00:00Z")
       .select(col("uuid").as("id"), col("number"),
         date_format(col("created_at"), "yyyy-MM-dd'T'HH:mm:ssXX").as("createdAt"),
@@ -400,5 +409,8 @@ class TicketSourceSpec extends SparkSuite {
     // every ticket once (ticket 0 merged with its chat) plus the orphan chat
     assert(out.collect().length === n + 1)
     assert(out.columns.contains("ticket_cpf"))
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(out.queryExecution.executedPlan) { case b: BatchScanExec => b }
+    assert(scans.length === 1, s"the ticket scan must be read once: $scans")
   }
 }
